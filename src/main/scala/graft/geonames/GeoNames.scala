@@ -34,9 +34,10 @@ import graft.operators.{PrefixMatch, TemplateFilters}
   *     `obj.uri`.
   *
   * Scale design: both admin dimensions are broadcast (≈100k rows total at
-  * full GeoNames scale); the main table is never shuffled — the whole
-  * plan is scan → filter → project → 2 broadcast joins → union → sink,
-  * i.e. map-only over the 8M-row (or 100 TB) fact side.
+  * full GeoNames scale); the main table is never shuffled and is read
+  * once — the whole plan is scan → filter + classify → 2 broadcast left
+  * joins → render pit and relation lines → explode → sink, i.e. one
+  * map-only stage over the 8M-row (or 100 TB) fact side.
   */
 object GeoNames {
 
@@ -113,10 +114,13 @@ object GeoNames {
   // ----------------------------------------------------------- transform
 
   /** Truthy admin-code values in key order (JS `R.filter(R.identity,
-    * R.values(R.pick(adminKeys, obj)))`, geonames.js:103).
+    * R.values(R.pick(adminKeys, obj)))`, geonames.js:103). `array_remove`
+    * rather than a `filter` lambda: higher-order functions have no
+    * generated code, and one in the main stage would split it out of
+    * whole-stage codegen.
     */
   private def truthyAdminCodes: Column =
-    filter(array(adminKeys.map(col): _*), c => length(c) > 0)
+    array_remove(array(adminKeys.map(k => coalesce(col(k), lit(""))): _*), "")
 
   /** The filtered, classified core: input rows + `type` column, untyped
     * rows dropped. Shared by pits and relations (relations are derived
@@ -132,9 +136,6 @@ object GeoNames {
       .where(col("type").isNotNull)
   }
 
-  /** Place-In-Time records with the reference's exact nested shape and
-    * field order (geonames.js:137–158).
-    */
   /** ECMAScript Number→String (radix 10) rendering of a double, as
     * JSON.stringify emits it: "null" for non-finite (parseFloat("") is
     * NaN and stringifies to JSON null), no ".0" on integral values,
@@ -156,74 +157,105 @@ object GeoNames {
           org.apache.spark.sql.graft.ColumnBridge.expression(c))),
       lit("null"))
 
+  /** The pit object's fields over a classified row, in the reference's
+    * order: uri, name, type, geometry, data (geonames.js:137–158).
+    */
+  private def pitFields: Seq[Column] = Seq(
+    concat(lit(baseUri), col("geonameid")).as("uri"),
+    col("name"),
+    col("type"),
+    struct(
+      lit("Point").as("type"),
+      // pre-rendered JS-style number strings; envelopes() splices
+      // them back to bare JSON numbers. try_cast, not cast: the
+      // reference's parseFloat("") is NaN (→ JSON null), where the
+      // ANSI cast would abort the whole job on one empty field.
+      // (parseFloat's prefix-parse of garbage like "3.5abc" is NOT
+      // mirrored — no such values exist in GeoNames dumps, and
+      // silently truncating them is worse than a null.)
+      array(jsNum(expr("try_cast(longitude as double)")),
+        jsNum(expr("try_cast(latitude as double)"))).as("coordinates")).as("geometry"),
+    struct(dataFields.map(col): _*).as("data"))
+
+  /** Place-In-Time records with the reference's exact nested shape and
+    * field order (geonames.js:137–158).
+    */
   def pits(places: DataFrame, config: Config): DataFrame =
-    classified(places, config).select(
-      col("geonameid"),
-      concat(lit(baseUri), col("geonameid")).as("uri"),
-      col("name"),
-      col("type"),
-      struct(
-        lit("Point").as("type"),
-        // pre-rendered JS-style number strings; envelopes() splices
-        // them back to bare JSON numbers. try_cast, not cast: the
-        // reference's parseFloat("") is NaN (→ JSON null), where the
-        // ANSI cast would abort the whole job on one empty field.
-        // (parseFloat's prefix-parse of garbage like "3.5abc" is NOT
-        // mirrored — no such values exist in GeoNames dumps, and
-        // silently truncating them is worse than a null.)
-        array(jsNum(expr("try_cast(longitude as double)")),
-          jsNum(expr("try_cast(latitude as double)"))).as("coordinates")).as("geometry"),
-      struct(dataFields.map(col): _*).as("data"))
+    classified(places, config).select(col("geonameid") +: pitFields: _*)
+
+  /** Adds the liesIn parent of each classified row as `_parent`
+    * (geonames.js:100–123). Only rows with exactly 3 truthy admin codes
+    * get probe keys: `_k2`, the codes joined with '.', probes admin2, and
+    * `_k1`, the first two, probes admin1 — the fallback taken when the
+    * admin2 parent is the row itself. Both dimensions are broadcast and
+    * left-joined, so every classified row keeps its pit; `_parent` is
+    * null when the row has no relation or its parent cannot be resolved
+    * (see DEVIATION above).
+    */
+  private def withParent(rows: DataFrame, admin1: DataFrame, admin2: DataFrame): DataFrame = {
+    val three = size(col("_codes")) === 3
+    val keyed = rows.withColumn("_codes", truthyAdminCodes)
+      .withColumn("_k2", when(three, array_join(col("_codes"), ".")))
+      .withColumn("_k1", when(three, array_join(slice(col("_codes"), 1, 2), ".")))
+    val a2 = broadcast(admin2.select(col("code").as("_k2"), col("geonameid").as("_p2")))
+    val a1 = broadcast(admin1.select(col("code").as("_k1"), col("geonameid").as("_p1")))
+    keyed.join(a2, Seq("_k2"), "left").join(a1, Seq("_k1"), "left")
+      .withColumn("_parent",
+        when(col("_p2") === col("geonameid"), col("_p1")).otherwise(col("_p2")))
+  }
+
+  /** The relation object's fields over a row with a `_parent`, in the
+    * reference's order: from, to, type.
+    */
+  private def relationFields(config: Config): Seq[Column] = Seq(
+    concat(lit(baseUri), col("geonameid")).as("from"),
+    concat(lit(baseUri), col("_parent")).as("to"),
+    lit(config.liesIn).as("type"))
 
   /** liesIn edges (geonames.js:100–123): exactly-3-truthy admin codes,
     * admin2 probe with admin1 fallback when the parent is the row itself.
     * Both dimension joins are broadcast; unresolvable parents are dropped
-    * (see DEVIATION above).
+    * (see DEVIATION above). `admin1` and `admin2` must hold one row per
+    * `code`, as [[readAdminCodes]] returns them; a repeated code repeats
+    * the edge.
     */
   def relations(places: DataFrame, admin1: DataFrame, admin2: DataFrame,
-                config: Config): DataFrame = {
-    val cand = classified(places, config)
-      .withColumn("_codes", truthyAdminCodes)
-      .where(size(col("_codes")) === 3)
-      .select(col("geonameid"),
-        array_join(col("_codes"), ".").as("_k2"),
-        array_join(slice(col("_codes"), 1, 2), ".").as("_k1"))
-    val a2 = broadcast(admin2.select(col("code").as("_k2"), col("geonameid").as("_p2")))
-    val a1 = broadcast(admin1.select(col("code").as("_k1"), col("geonameid").as("_p1")))
-    cand.join(a2, Seq("_k2"), "left").join(a1, Seq("_k1"), "left")
-      .withColumn("_parent",
-        when(col("_p2") === col("geonameid"), col("_p1")).otherwise(col("_p2")))
+                config: Config): DataFrame =
+    withParent(classified(places, config), admin1, admin2)
       .where(col("_parent").isNotNull)
-      .select(
-        concat(lit(baseUri), col("geonameid")).as("from"),
-        concat(lit(baseUri), col("_parent")).as("to"),
-        lit(config.liesIn).as("type"))
-  }
+      .select(relationFields(config): _*)
 
-  /** Tagged NDJSON envelope stream — pit lines then relation lines, each
-    * `{"type":...,"obj":{...}}` (geonames.js:160–170). One DataFrame with
-    * a single `value` string column, ready for `df.write.text`.
+  /** Tagged NDJSON envelope stream, each line `{"type":...,"obj":{...}}`
+    * (geonames.js:160–170): per classified row its pit line, followed by
+    * its relation line when it has a resolvable parent. One pass over
+    * `places` — classify, broadcast-probe the parents, render both lines,
+    * explode them and drop the missing relation line — giving one
+    * DataFrame with a single `value` string column, ready for
+    * `df.write.text`. `admin1` and `admin2` must hold one row per `code`,
+    * as [[readAdminCodes]] returns them: the parents are left-joined into
+    * every classified row, so a repeated code repeats that row's pit line
+    * as well as its relation line.
     */
   def envelopes(places: DataFrame, admin1: DataFrame, admin2: DataFrame,
                 config: Config): DataFrame = {
     // coordinates are pre-rendered JS-number STRINGS inside the struct
-    // (see pits); unquote them structurally. The anchor is safe: an
+    // (see pitFields); unquote them structurally. The anchor is safe: an
     // unescaped `"coordinates":["` sequence cannot occur inside a JSON
     // string value (to_json escapes quotes as \"), and the rendered
     // numbers contain no quotes.
-    val pitJson = pits(places, config).select(
-      regexp_replace(
-        to_json(struct(
-          lit("pit").as("type"),
-          struct(col("uri"), col("name"), col("type"), col("geometry"),
-            col("data")).as("obj"))),
-        "\"coordinates\":\\[\"([^\"]*)\",\"([^\"]*)\"\\]",
-        "\"coordinates\":[$1,$2]").as("value"))
-    val relJson = relations(places, admin1, admin2, config).select(
-      to_json(struct(
-        lit("relation").as("type"),
-        struct(col("from"), col("to"), col("type")).as("obj"))).as("value"))
-    pitJson.unionByName(relJson)
+    val pitLine = regexp_replace(
+      to_json(struct(lit("pit").as("type"), struct(pitFields: _*).as("obj"))),
+      "\"coordinates\":\\[\"([^\"]*)\",\"([^\"]*)\"\\]",
+      "\"coordinates\":[$1,$2]")
+    val relationLine = when(col("_parent").isNotNull,
+      to_json(struct(lit("relation").as("type"),
+        struct(relationFields(config): _*).as("obj"))))
+    // both lines are rendered in one codegen'd projection; the explode
+    // after it only moves the two strings
+    withParent(classified(places, config), admin1, admin2)
+      .select(pitLine.as("_pit"), relationLine.as("_rel"))
+      .select(explode(array(col("_pit"), col("_rel"))).as("value"))
+      .where(col("value").isNotNull)
   }
 
   /** Bronze materialization of the main table, partitioned by country —

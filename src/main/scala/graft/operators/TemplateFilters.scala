@@ -26,9 +26,37 @@ object TemplateFilters {
     * documented edge (SURVEY.md §1.4.3): with no templates nothing passes,
     * not even whitelisted ids, because the whitelist disjunct lives inside
     * the per-template closure.
+    *
+    * Single-key templates with a string value are folded per key into one
+    * [[oneOf]]; the other templates stay [[whereEq]] conjunctions. The
+    * fold exists for the JIT: an OR of one equality per template costs
+    * about 87 bytes of bytecode each in the generated `processNext`, and
+    * HotSpot never compiles a method over 8,000 bytes (`HugeMethodLimit`),
+    * so past ~44 country templates the GeoNames main stage ran
+    * interpreted. A folded IN compiles to a hash-set lookup whose code
+    * size does not grow with the number of templates.
     */
-  def anyTemplate(filters: Seq[Map[String, Any]]): Column =
-    filters.map(whereEq).reduceOption(_ || _).getOrElse(lit(false))
+  def anyTemplate(filters: Seq[Map[String, Any]]): Column = {
+    val (single, multi) = filters.partition(t => t.size == 1 && t.head._2.isInstanceOf[String])
+    val pairs = single.map(t => (t.head._1, t.head._2.asInstanceOf[String]))
+    val folded = pairs.map(_._1).distinct.map(k =>
+      oneOf(k, pairs.collect { case (`k`, v) => v }.distinct))
+    (folded ++ multi.map(whereEq)).reduceOption(_ || _).getOrElse(lit(false))
+  }
+
+  /** `col(k)` equals one of `values` — the same truth value, NULL
+    * included, as the OR of `col(k) === v`. On a string column this is
+    * one IN, which Catalyst turns into a hash-set `InSet` past 10 values
+    * (and into a plain `=` for one value); the `typeof` test is
+    * constant-folded away at planning. On a column
+    * of any other type Spark coerces `=` and `IN` differently against a
+    * string (`=` casts the column, `IN` casts to string), so the plain OR
+    * is kept there. The cast, a no-op where the IN is taken, lets the
+    * untaken branch still analyze on any column type.
+    */
+  private def oneOf(k: String, values: Seq[String]): Column =
+    when(typeof(col(k)) === "string", col(k).cast("string").isin(values: _*))
+      .otherwise(values.map(v => col(k) === lit(v)).reduce(_ || _))
 
   /** Full reference filter: (any template matches) OR (id ∈ whitelist) —
     * but only when at least one template exists (see [[anyTemplate]]).

@@ -6,6 +6,11 @@ import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.col
 
 /** End-to-end pipeline test on a synthetic GeoNames extract exercising
@@ -158,6 +163,76 @@ class GeoNamesSpec extends SparkSpec {
       s"js_number_string not in a codegen'd (*) Project:\n$plan")
     plan should not include "BatchEvalPython"
     plan should not include "ScalaUDF"
+  }
+
+  /** Walks a final plan through the adaptive wrappers and query stages. */
+  private object Plans extends AdaptiveSparkPlanHelper {
+    def children(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+  }
+
+  /** `df` executed once, so that its adaptive plan is final. */
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  private def isMainScan(p: SparkPlan): Boolean = p match {
+    case f: FileSourceScanExec =>
+      f.relation.location.rootPaths.exists(_.toString.endsWith("allCountries.txt"))
+    case _ => false
+  }
+
+  test("envelopes: every codegen stage stays under HotSpot's 8,000-byte method limit") {
+    // HotSpot's JIT skips any method over HugeMethodLimit (8,000 bytes of
+    // bytecode) unless -XX:-DontCompileHugeMethods is set, so a generated
+    // processNext past it runs interpreted for the whole job. An OR of
+    // one equality per country template grew the main stage ~87 bytes
+    // per template; the benchmark's shape and a whole-world list crossed
+    // the limit.
+    val types = Map("P" -> "hg:Place", "PPLX" -> "hg:Neighbourhood",
+      "PPLA" -> "hg:Municipality", "PPLA4" -> "hg:Village", "PPLC" -> "hg:Capital",
+      "ADM" -> "hg:Admin", "ADM1" -> "hg:Province", "PCL" -> "hg:Country",
+      "STM" -> "hg:Stream", "S" -> "hg:Building", "MT" -> "hg:Mountain",
+      "PK" -> "hg:Mountain", "PRK" -> "hg:Park")
+    def countries(n: Int) = (0 until n).map(i => Map("countryCode" -> f"C$i%03d"))
+    val configs = Seq(
+      "1 template" -> config,
+      "62 + 2 templates, whitelist" -> GeoNames.Config(
+        filters = countries(62) ++ Seq(
+          Map("countryCode" -> "C080", "featureClass" -> "P"),
+          Map("countryCode" -> "C090", "featureClass" -> "A")),
+        types = types,
+        extraUris = (0 until 400).map(i => s"${GeoNames.baseUri}${2000000 + 7 * i}")),
+      "250 templates" -> GeoNames.Config(filters = countries(250), types = types))
+    for ((name, cfg) <- configs) {
+      val stages = Plans.collect(finalPlan(GeoNames.envelopes(places, admin1, admin2, cfg))) {
+        case w: WholeStageCodegenExec => w
+      }
+      stages should not be empty
+      for (stage <- stages) {
+        val maxMethod = CodeGenerator.compile(stage.doCodeGen()._2)._2.maxMethodCodeSize
+        withClue(s"$name, codegen stage ${stage.codegenStageId}: ") {
+          maxMethod should be < 8000
+        }
+      }
+    }
+  }
+
+  test("envelopes: one scan of the main file, and no exchange on its side") {
+    // the scaladoc's "the main table is never shuffled and is read once"
+    val plan = finalPlan(GeoNames.envelopes(places, admin1, admin2, config))
+    Plans.collect(plan) { case p if isMainScan(p) => p } should have size 1
+    def pathToMain(p: SparkPlan): Option[List[SparkPlan]] =
+      if (isMainScan(p)) Some(List(p))
+      else Plans.children(p).iterator.flatMap(pathToMain).nextOption().map(p :: _)
+    val mainSide = pathToMain(plan).get
+    withClue(s"main-table side of:\n$plan\n") {
+      mainSide.collect { case e: Exchange => e } shouldBe empty
+    }
   }
 
   test("golden NDJSON: envelope shape, field order, and values") {
